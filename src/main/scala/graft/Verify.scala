@@ -1,8 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare. A query that
+  * fails is logged and counted; the dump still completes, then prints
+  * `FAILED n` and exits 1. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
@@ -11,18 +12,16 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Graft.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Graft.envSession()
     new java.io.File(outDir).mkdirs()
+    var nFailed = 0
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
+        nFailed += 1
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally
         // Bound materializeDisk's session lifetime: without this a full
@@ -50,5 +49,10 @@ object Verify {
     // every rung JSON is self-describing (r10 verdict item 1).
     Files.writeString(Paths.get(s"$outDir/run_env.json"), RunEnv.json(cpus, 1))
     spark.stop()
+    // a missing dump must not read as a pass: count it and exit nonzero
+    if (nFailed > 0) {
+      println(s"[verify] FAILED $nFailed")
+      sys.exit(1)
+    }
   }
 }

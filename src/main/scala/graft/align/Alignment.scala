@@ -48,13 +48,17 @@ object Alignment {
     * columns back to the long bar schema. Symbols are discovered from
     * `*_Close` headers like the reference does (app.py:80-85). */
   def wideToLong(wide: DataFrame): DataFrame = {
-    val symbols = wide.columns.filter(_.endsWith("_Close")).map(_.stripSuffix("_Close")).sorted
-    val stacks = symbols.map { s =>
+    val stacks = wideSymbols(wide).map { s =>
       struct(lit(s).as("symbol"), col(s + "_Open").as("open"), col(s + "_High").as("high"),
         col(s + "_Low").as("low"), col(s + "_Close").as("close"),
         col(s + "_Volume").cast("long").as("volume"))
     }
-    wide.select(col("Date").as("date"), explode(array(stacks.toIndexedSeq: _*)).as("bar"))
+    wide.select(col("Date").as("date"), explode(array(stacks: _*)).as("bar"))
       .select("date", "bar.*")
   }
+
+  /** The sorted symbols of a wide frame, from its `*_Close` headers —
+    * the symbols [[wideToLong]] emits on every row. Schema only, no job. */
+  def wideSymbols(wide: DataFrame): Seq[String] =
+    wide.columns.filter(_.endsWith("_Close")).map(_.stripSuffix("_Close")).sorted.toSeq
 }

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,16 +11,19 @@ import org.apache.spark.sql.functions._
   * all four similarity measures over the returns.
   *
   * Returns the all-zero result when fewer than 2 aligned points
-  * (similarity.py:503-512). One job: a date join + window + one
-  * multi-aggregate pass. DTW dispatches on series length: at or below
-  * `collectLimit` points the pair's return arrays collect to the
-  * driver and the kernel runs locally (the reference's regime,
-  * ~1.8k points); above it the points stay on the cluster and the
-  * kernel runs inside a typed [[DtwPairAggregator]] on the final
-  * aggregate task — the driver only receives the scalar. Both paths
-  * feed the identical sorted arrays to [[Dtw.distance]], so the
-  * dispatch is invisible in the result (InvariantsSpec property-checks
-  * the equality).
+  * (similarity.py:503-512). One aggregate: a date join + window feed a
+  * single multi-aggregate pass that yields the metrics, the point
+  * count and, at or below `collectLimit` points, the pair's sorted
+  * return arrays — over a cached bar table that is 3 Spark jobs
+  * (broadcast, window exchange, result; JobCountSpec pins it). The
+  * kernel then runs locally on those arrays (the reference's regime,
+  * ~1.8k points). Above `collectLimit` the aggregate collects nothing,
+  * the points stay on the cluster and the kernel runs inside a typed
+  * [[DtwPairAggregator]] on the final aggregate task of a second pass
+  * — the driver only receives the scalar. Both paths feed the
+  * identical sorted arrays to [[Dtw.distance]], so the dispatch is
+  * invisible in the result (InvariantsSpec property-checks the
+  * equality, CompareAssetsSpec pins it on this façade).
   */
 object CompareAssets {
 
@@ -47,7 +50,8 @@ object CompareAssets {
     val w = Window.orderBy("d")
     // technical-variant returns over ALIGNED positions (0.0 on invalid
     // pairs — technical.py:151-153); aligned values are all positive, so
-    // only the ratio path fires.
+    // only the ratio path fires. One return per aligned point after the
+    // first, so n_points < 1 is exactly "fewer than 2 aligned points".
     val rets = aligned
       .withColumn("prev_a", lag(col("pa"), 1).over(w))
       .withColumn("prev_b", lag(col("pb"), 1).over(w))
@@ -57,28 +61,28 @@ object CompareAssets {
           .otherwise(0.0).as("a"),
         when(col("pb") > 0 && col("prev_b") > 0, log(col("pb") / col("prev_b")))
           .otherwise(0.0).as("b"))
-      .cache()
+      .withColumn("pos", row_number().over(w).cast("long"))
 
-    try {
-      val n = rets.count()
-      if (n < 1 || aligned.count() < 2) return Zero
-      val m = Similarity.metrics(rets.select("a", "b")).head()
-      val dtw =
-        if (n <= collectLimit) {
-          val arrs = rets.orderBy("d").select("a", "b").as[(Double, Double)].collect()
-          Dtw.distance(arrs.map(_._1), arrs.map(_._2))
-        } else
-          rets.select(row_number().over(w).cast("long").as("pos"),
-              col("a"), col("b"))
-            .as[(Long, Double, Double)]
-            .select(DtwPairAggregator.column())
-            .head()
-      SimilarityResult(
-        euclidean = m.getAs[Double]("euclidean"),
-        pearson = m.getAs[Double]("pearson"),
-        dtw = dtw,
-        cosine = m.getAs[Double]("cosine"),
-        n_points = n)
-    } finally rets.unpersist()
+    // collect_list skips the nulls, so the list holds at most
+    // collectLimit points and is complete exactly when n <= collectLimit
+    val m = Similarity.metrics(rets, array_sort(collect_list(
+      when(col("pos") <= collectLimit, struct(col("d"), col("a"), col("b"))))).as("pts"))
+      .head()
+    val n = m.getAs[Long]("n_points")
+    if (n < 1) return Zero
+    val dtw =
+      if (n <= collectLimit) {
+        val pts = m.getSeq[Row](m.fieldIndex("pts"))
+        Dtw.distance(pts.map(_.getDouble(1)).toArray, pts.map(_.getDouble(2)).toArray)
+      } else
+        rets.select("pos", "a", "b").as[(Long, Double, Double)]
+          .select(DtwPairAggregator.column())
+          .head()
+    SimilarityResult(
+      euclidean = m.getAs[Double]("euclidean"),
+      pearson = m.getAs[Double]("pearson"),
+      dtw = dtw,
+      cosine = m.getAs[Double]("cosine"),
+      n_points = n)
   }
 }

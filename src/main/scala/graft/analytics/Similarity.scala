@@ -26,15 +26,16 @@ object Similarity {
   /** A9-A13 in one multi-aggregate pass over an aligned pair frame with
     * columns (a, b): pearson, euclidean, cosine + its decomposition, n.
     * Zero-variance / zero-norm edge cases yield 0.0, not null
-    * (similarity.py:166-168, 417-418). */
-  def metrics(aligned: DataFrame): DataFrame =
+    * (similarity.py:166-168, 417-418). `extra` aggregates ride the same
+    * pass (CompareAssets adds the pair's points). */
+  def metrics(aligned: DataFrame, extra: Column*): DataFrame =
     aligned.agg(
       coalesce(corr(col("a"), col("b")), lit(0.0)).as("pearson"),
-      sqrt(sum(pow(col("a") - col("b"), 2))).as("euclidean"),
-      sum(col("a") * col("b")).as("dot"),
-      sqrt(sum(col("a") * col("a"))).as("norm_a"),
-      sqrt(sum(col("b") * col("b"))).as("norm_b"),
-      count(lit(1)).as("n_points"))
+      (Seq(sqrt(sum(pow(col("a") - col("b"), 2))).as("euclidean"),
+        sum(col("a") * col("b")).as("dot"),
+        sqrt(sum(col("a") * col("a"))).as("norm_a"),
+        sqrt(sum(col("b") * col("b"))).as("norm_b"),
+        count(lit(1)).as("n_points")) ++ extra): _*)
       .withColumn("cosine",
         when(col("norm_a") === 0.0 || col("norm_b") === 0.0, 0.0)
           .otherwise(col("dot") / (col("norm_a") * col("norm_b"))))

@@ -23,32 +23,45 @@ object EtlJob {
 
   /** Returns (long bar table aligned to the master calendar, report). */
   def run(payloads: DataFrame): (DataFrame, Report) = {
-    val bars = ChartJson.parse(payloads)
-
-    val anomalies = Cleaning.inconsistencies(bars).count()
-    val filled = Cleaning.dropInvalid(
-      Cleaning.forwardFill(bars, "close", Seq("symbol"), Seq(col("date"))))
-    // feeds four report counts and is handed to the caller; blocks are
-    // GC-reclaimed once the caller drops it (see Graft.materialize).
-    val aligned = graft.Graft.materialize(Alignment.alignToCalendar(filled))
-
-    val report = Report(
-      symbols = aligned.select("symbol").distinct().count(),
-      calendarDays = aligned.select("date").distinct().count(),
-      alignedRows = aligned.count(),
-      missingClose = aligned.filter(col("close").isNull).count(),
-      anomalies = anomalies)
+    val (aligned, report, _) = runAligned(payloads)
     (aligned, report)
   }
 
   /** Full job with sinks: canonical parquet + reference-compatible wide CSV. */
   def runWithSinks(payloads: DataFrame, parquetOut: String, csvOut: String): Report = {
-    val (aligned, report) = run(payloads)
+    val (aligned, report, symbols) = runAligned(payloads)
     aligned.write.mode("overwrite").parquet(parquetOut)
-    val symbols = aligned.select("symbol").distinct()
-      .collect().map(_.getString(0)).sorted.toSeq
     val wide = Alignment.pivotWide(aligned, symbols)
     BarsIO.writeWideCsv(wide.withColumnRenamed("date", "Date"), csvOut)
     report
+  }
+
+  /** [[run]] plus the sorted symbol list the pivot needs. The four
+    * aligned-table counts and the symbol list come from ONE aggregate,
+    * not a job chain per count; its sets are bounded by the symbol
+    * count and the calendar length. */
+  private def runAligned(payloads: DataFrame): (DataFrame, Report, Seq[String]) = {
+    val bars = ChartJson.parse(payloads)
+
+    val anomalies = Cleaning.inconsistencies(bars).count()
+    val filled = Cleaning.dropInvalid(
+      Cleaning.forwardFill(bars, "close", Seq("symbol"), Seq(col("date"))))
+    // feeds the report aggregate and is handed to the caller; blocks are
+    // GC-reclaimed once the caller drops it (see Graft.materialize).
+    val aligned = graft.Graft.materialize(Alignment.alignToCalendar(filled))
+
+    val r = aligned.agg(
+      collect_set(col("symbol")).as("symbols"),
+      size(collect_set(col("date"))).cast("long").as("days"),
+      count(lit(1)).as("rows"),
+      count(when(col("close").isNull, 1)).as("missing")).head()
+    val symbols = r.getSeq[String](0).sorted
+    val report = Report(
+      symbols = symbols.size.toLong,
+      calendarDays = r.getLong(1),
+      alignedRows = r.getLong(2),
+      missingClose = r.getLong(3),
+      anomalies = anomalies)
+    (aligned, report, symbols)
   }
 }

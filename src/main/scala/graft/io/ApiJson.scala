@@ -1,7 +1,7 @@
 package graft.io
 
 import graft.analytics.CompareAssets.SimilarityResult
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** S10 — the reference's JSON API payloads (`app.py:156-487`) as an
@@ -17,6 +17,11 @@ import org.apache.spark.sql.functions._
   * `collect()` is the correct plan at any corpus scale. The heavy
   * lifting (vol pipeline, correlation matrix, DTW) stays distributed
   * upstream.
+  *
+  * Each frame-taking render is a collect followed by its row form, so a
+  * caller that already holds a payload's rows (Dashboard renders the
+  * risk and heatmap rows into both the JSON and the PDF) computes each
+  * result once and renders it through the same code.
   *
   * Rendering is dependency-free (no json4s coupling): keys are emitted
   * in the reference's insertion order, doubles through the same
@@ -43,24 +48,32 @@ object ApiJson {
       s"${d.toLong}.0"
     else d.toString
 
-  private def round(d: Double, dp: Int): Double =
+  /** HALF_UP at `dp` decimals over the double's shortest decimal form —
+    * the rounding Spark's `round` applies to a double. */
+  def round(d: Double, dp: Int): Double =
     java.math.BigDecimal.valueOf(d)
       .setScale(dp, java.math.RoundingMode.HALF_UP).doubleValue()
 
   /** `/api/symbols` (app.py:156-159): sorted symbol list. */
-  def symbols(bars: DataFrame, keyCol: String = "symbol"): String = {
-    val syms = bars.select(col(keyCol)).distinct()
-      .orderBy(keyCol).collect().map(_.getString(0))
-    s"""{"symbols": [${syms.map(jstr).mkString(", ")}]}"""
-  }
+  def symbols(bars: DataFrame, keyCol: String = "symbol"): String =
+    symbols(bars.select(col(keyCol)).distinct()
+      .orderBy(keyCol).collect().map(_.getString(0)).toSeq)
+
+  /** `/api/symbols` from the already sorted symbol list. */
+  def symbols(sorted: Seq[String]): String =
+    s"""{"symbols": [${sorted.map(jstr).mkString(", ")}]}"""
 
   /** `/api/heatmap` (app.py:322-353): dense correlation matrix from the
     * engine's long-form heatmap frame (ka, kb, corr — diag included).
     * Cells round to 4 dp like the endpoint; symbol order is sorted
     * (the engine's deterministic stand-in for the reference's dataset
     * column order). */
-  def heatmap(corrLong: DataFrame): String = {
-    val cells = corrLong.select("ka", "kb", "corr").collect()
+  def heatmap(corrLong: DataFrame): String =
+    heatmap(corrLong.select("ka", "kb", "corr").collect().toSeq)
+
+  /** `/api/heatmap` from the collected (ka, kb, corr) rows. */
+  def heatmap(corrRows: Seq[Row]): String = {
+    val cells = corrRows
       .map(r => (r.getString(0), r.getString(1)) -> round(r.getDouble(2), 4))
       .toMap
     val syms = cells.keys.map(_._1).toSeq.distinct.sorted
@@ -76,11 +89,19 @@ object ApiJson {
     * (symbol, vol, risk_class, rank, p33, p66 — Volatility.classify's
     * exact output). Summary keys are the capitalized class labels
     * (volatility.py:282, which the endpoint passes through verbatim). */
-  def risk(classified: DataFrame, keyCol: String = "symbol"): String = {
-    val rows = classified
+  def risk(classified: DataFrame, keyCol: String = "symbol"): String =
+    risk(riskRows(classified, keyCol))
+
+  /** The rows the risk payload renders: (key, vol, risk_class, rank,
+    * p33, p66), rank order. */
+  def riskRows(classified: DataFrame, keyCol: String = "symbol"): Seq[Row] =
+    classified
       .select(col(keyCol), col("vol"), col("risk_class"),
         col("rank"), col("p33"), col("p66"))
-      .orderBy("rank").collect()
+      .orderBy("rank").collect().toSeq
+
+  /** `/api/risk` from [[riskRows]]. */
+  def risk(rows: Seq[Row]): String = {
     val cls = rows.map { r =>
       s"""{"symbol": ${jstr(r.getString(0))}, "volatility": ${jnum(round(r.getDouble(1), 6))}, "volatility_pct": ${jnum(round(r.getDouble(1) * 100, 2))}, "risk_class": ${jstr(r.getString(2))}, "rank": ${r.getInt(3)}}"""
     }.mkString("[", ", ", "]")

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 /** S9 — the reference's PDF report (`visualization/pdf_export.py:84-415`)
   * as an engine sink, dependency-free. The reference assembles a
@@ -20,9 +20,20 @@ import org.apache.spark.sql.DataFrame
   */
 object PdfReport {
 
-  /** One report section: numbered heading + the frame rendered as a
-    * fixed-width table (Courier, so column alignment is exact). */
-  case class Section(title: String, table: DataFrame, maxRows: Int = 50)
+  /** One report section: numbered heading + a table rendered fixed
+    * width (Courier, so column alignment is exact). Rows past `maxRows`
+    * are cut, and the heading says so. */
+  case class Section(title: String, columns: Seq[String], rows: Seq[Row], maxRows: Int)
+
+  /** The default row cap of a section. */
+  val MaxRows = 50
+
+  object Section {
+    /** A section over a frame: collects at most `maxRows + 1` rows, one
+      * past the cap so the cut is known. */
+    def apply(title: String, table: DataFrame, maxRows: Int = MaxRows): Section =
+      Section(title, table.columns.toSeq, table.limit(maxRows + 1).collect().toSeq, maxRows)
+  }
 
   private val PageW = 612 // US Letter, points
   private val PageH = 792
@@ -42,10 +53,9 @@ object PdfReport {
   /** (font, size, text) lines; font "B"=Helvetica-Bold, "C"=Courier,
     * "H"=Helvetica. */
   private def tableLines(s: Section): Seq[(String, Int, String)] = {
-    val cols = s.table.columns.toSeq
-    val rows = s.table.limit(s.maxRows + 1).collect()
-    val truncated = rows.length > s.maxRows
-    val shown = rows.take(s.maxRows).map(r =>
+    val cols = s.columns
+    val truncated = s.rows.length > s.maxRows
+    val shown = s.rows.take(s.maxRows).map(r =>
       cols.indices.map(i => String.valueOf(r.get(i))).toSeq)
     val widths = cols.indices.map { i =>
       (cols(i).length +: shown.map(_(i).length)).max.min(28)

@@ -83,7 +83,7 @@ object DtwAnchor {
       r6(collected.cosine) == r6(agg.cosine)
 
     // Dump the aligned return series the arms consumed — the same
-    // join/filter/lag plan compare builds (CompareAssets.scala:39-59).
+    // join/filter/lag/row_number plan CompareAssets.compare builds.
     val a = bars.filter(col("symbol") === "0")
       .select(col("date").as("d"), col("value").as("pa"))
     val b = bars.filter(col("symbol") === "1")
